@@ -5,6 +5,11 @@ on local[$SPARK_GRAFT_CPUS]. The primary metric is the flagship
 extraction pipeline's documents/sec (media spans OCR'd end-to-end);
 per-query wall seconds are reported in "queries".
 
+Every query is built by its `__spark_entry__.queries()` builder; the
+four bench keys with no registry twin are the BENCH_ONLY builders
+below. bench_extra.py and easyocr_spark/plans/explain.py resolve their
+query names through the same `resolve`.
+
 Scaling evidence (north rule: >=0.8 efficiency N -> 4N) is produced by
 tools/scaling_bench.py, which runs THIS workload at two parallelism
 levels and writes BENCH/BASELINE.md.
@@ -19,14 +24,26 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F  # noqa: E402
 
-def _previous_round_timings() -> dict[str, float]:
-    """Rolling per-query MIN across ALL driver-recorded BENCH_r*.json
-    rounds, used as the outlier baseline. A single throttle-contaminated
-    round (e.g. r3's extract 6.76s vs a 3.99s idle-box re-run) must not
-    become the next round's baseline, so the record is the best wall ever
-    observed for each query, not the newest file's. Missing/garbled
-    files -> skipped; no files -> {}."""
+from __spark_entry__ import queries  # noqa: E402
+from easyocr_spark.operators import pipeline  # noqa: E402
+from easyocr_spark.operators import text_analysis as ta  # noqa: E402
+from easyocr_spark.sources import tables  # noqa: E402
+
+
+def _previous_round_timings(
+    cpus: int, sf: str, media_spec_version: int
+) -> dict[str, float]:
+    """Rolling per-query MIN across the driver-recorded BENCH_r*.json
+    rounds measured like this run — same ``cpus``, ``sf`` and
+    ``media_spec_version`` — used as the outlier baseline. Walls from a
+    different core count, scale or render spec are not comparable (a
+    32-core record flags every 4-core flagship run). A single
+    throttle-contaminated round (e.g. r3's extract 6.76s vs a 3.99s
+    idle-box re-run) must not become the next round's baseline, so the
+    record is the best wall ever observed for each query, not the
+    newest file's. Missing/garbled files -> skipped; no files -> {}."""
     import glob
     import re
 
@@ -40,6 +57,9 @@ def _previous_round_timings() -> dict[str, float]:
                 d = json.load(f)
             # the driver wraps our JSON line under "parsed"
             d = d.get("parsed", d)
+            key = (d.get("cpus"), d.get("sf"), d.get("media_spec_version"))
+            if key != (cpus, sf, media_spec_version):
+                continue
             for name, wall in dict(d.get("queries", {})).items():
                 wall = float(wall)
                 if wall > 0 and (name not in record or wall < record[name]):
@@ -55,7 +75,7 @@ DISPERSION_FLOOR_S = 0.5  # sub-second walls jitter >1.5x naturally; ignore
 
 def is_suspect(walls: list[float], record: float | None, guard: float) -> bool:
     """Pure decision: should this query's best wall be flagged as
-    environment noise? With an all-rounds record, flag when the best
+    environment noise? With a record, flag when the best
     run still blows past ``guard`` x the record (the sandbox shows
     random 5-15x throttle slowdowns after sustained load). With NO
     record (first appearance — the case r4's knn_ivf/hll/substring
@@ -70,27 +90,92 @@ def is_suspect(walls: list[float], record: float | None, guard: float) -> bool:
     return best > DISPERSION_FLOOR_S and med > DISPERSION_GUARD * best
 
 
-def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
-    from pyspark.sql import functions as F
+# bench.py key -> __spark_entry__.queries() name, where the two differ
+REGISTRY_NAMES = {
+    "countmin": "countmin_heavy_hitters",
+    "bloom": "bloom_membership",
+    "kmeans": "kmeans_clusters",
+    "winnowing": "winnowing_fingerprints",
+    "dsir": "dsir_importance",
+}
 
-    from easyocr_spark.operators import bpe as bpe_mod
-    from easyocr_spark.operators import (
-        cleaning,
-        clustering,
-        dedup,
-        events,
-        mixing,
-        pii,
-        pipeline,
-        retrieval,
-        sharding,
-        similarity,
-        sketches,
-        web_extract,
+
+def _extract(spark, sf_dir):
+    return pipeline.extract_documents(
+        tables.interleaved_documents(spark, sf_dir),
+        tables.media_table(spark, sf_dir),
     )
-    from easyocr_spark.operators import text_analysis as ta
+
+
+def _detect_recognize_refs(spark, sf_dir):
+    return pipeline.ocr_media_refs(
+        pipeline.explode_spans(tables.interleaved_documents(spark, sf_dir)),
+        tables.media_table(spark, sf_dir),
+    )
+
+
+def _span_algebra(spark, sf_dir):
+    return pipeline.reassemble(
+        pipeline.explode_spans(tables.interleaved_documents(spark, sf_dir))
+        .select("doc_id", "offset", "kind", "text", "media_ref")
+    )
+
+
+def _quality_tokens(spark, sf_dir):
+    flat = tables.read_table(spark, sf_dir, "documents")
+    return ta.quality_score(flat).join(
+        ta.token_stats(flat).withColumnRenamed("n_tokens", "n_tokens_ws"),
+        "doc_id",
+    )
+
+
+# the only hand-written builders: bench keys with no registry twin
+BENCH_ONLY = {
+    "extract": _extract,
+    "detect_recognize_refs": _detect_recognize_refs,
+    "span_algebra": _span_algebra,
+    "quality_tokens": _quality_tokens,
+}
+
+# the timed queries, in the order of the JSON "queries" object
+QUERY_NAMES = [
+    "extract", "detect_recognize_refs", "span_algebra", "dedup_minhash_lsh",
+    "dedup_simhash", "dedup_simhash128", "knn_brute", "knn_lsh", "knn_ivf",
+    "knn_pq", "quality_tokens", "dedup_substring_spans", "lm_cross_entropy",
+    "sequence_pack", "decontaminate", "decontaminate_spans",
+    "neardup_pagerank", "shard_leakage", "snapshot_dedup",
+    "strip_boilerplate", "events_sessionize", "events_distinct_hll",
+    "pii_scan", "corpus_mix", "countmin", "bloom", "kmeans", "winnowing",
+    "dsir", "embedding_outliers", "bm25_topk", "ccnet_buckets", "c4_clean",
+    "gopher_rules", "cdc_chunks", "hard_negatives", "unimax_mix",
+    "ngram_novelty", "html_extract", "layout_reading_order",
+    "normalize_text", "char_coverage", "length_quantiles_hist",
+]
+
+
+def resolve(names):
+    """name -> builder(spark, sf_dir) -> DataFrame. A name is a bench
+    key, a bench-only builder or any __spark_entry__.queries() name."""
+    registry = queries()
+    return {
+        n: BENCH_ONLY.get(n) or registry[REGISTRY_NAMES.get(n, n)]
+        for n in names
+    }
+
+
+def checksum(df) -> int:
+    # count() is NOT a safe benchmark action: Catalyst prunes
+    # row-count-preserving subtrees (e.g. a left join on aggregate
+    # keys elides the entire build side). Hash every column so the
+    # full plan must execute.
+    row = df.select(
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h")
+    ).collect()
+    return row[0]["h"] or 0
+
+
+def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
     from easyocr_spark.session import get_spark
-    from easyocr_spark.sources import tables
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -107,30 +192,18 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
     pipeline.ocr_media_refs(
         pipeline.explode_spans(docs.limit(64)), media
     ).count()
-    flat_docs = tables.read_table(spark, sf_dir, "documents")
-    emb = tables.read_table(spark, sf_dir, "embeddings")
-    ev = tables.read_table(spark, sf_dir, "events")
 
     timings: dict[str, float] = {}
     outliers: list[str] = []
-    prev = _previous_round_timings()
+    prev = _previous_round_timings(cpus, sf_dir, media_spec_version)
 
-    def checksum(df) -> int:
-        # count() is NOT a safe benchmark action: Catalyst prunes
-        # row-count-preserving subtrees (e.g. a left join on aggregate
-        # keys elides the entire build side). Hash every column so the
-        # full plan must execute.
-        row = df.select(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h")
-        ).collect()
-        return row[0]["h"] or 0
-
-    def timed(name: str, df_fn, runs: int = 2, guard: float = 3.0,
+    def timed(name: str, build, runs: int = 2, guard: float = 3.0,
               cooldown: float = 0.0) -> None:
         # best-of-N: single-shot walls swing ~3x with JVM warm-up/GC
         # timing; capacity is the fastest run. First-appearance queries
         # get a third run so the dispersion fallback in is_suspect has
-        # a usable median.
+        # a usable median. The plan is built inside the timer: some
+        # builders run driver-side jobs (model collects, iterations).
         record = prev.get(name)
         if not record:
             runs = max(runs, 3)
@@ -139,116 +212,38 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
             if cooldown:
                 time.sleep(cooldown)
             t0 = time.time()
-            checksum(df_fn())
+            checksum(build(spark, sf_dir))
             walls.append(time.time() - t0)
         # self-defense against sandbox throttling (the box shows random
         # 5-15x slowdowns after sustained load — r2's knn_brute=62.9s and
         # r3's extract=6.76s were both verified noise): if the best run
-        # looks suspect vs the all-rounds record (or, for record-less
-        # queries, by within-round dispersion), re-run once; if it STILL
-        # does, flag it in the JSON so a throttled wall can't masquerade
-        # as a regression.
+        # looks suspect vs the record (or, for record-less queries, by
+        # within-round dispersion), re-run once; if it STILL does, flag
+        # it in the JSON so a throttled wall can't masquerade as a
+        # regression.
         if is_suspect(walls, record, guard):
             if cooldown:
                 time.sleep(cooldown)
             t0 = time.time()
-            checksum(df_fn())
+            checksum(build(spark, sf_dir))
             walls.append(time.time() - t0)
             if is_suspect(walls, record, guard):
                 outliers.append(name)
         timings[name] = round(min(walls), 3)
 
-    # flagship: full OCR extraction (explode -> dedup refs -> join bytes
-    # -> Arrow OCR UDF -> join back -> reassemble). The flagship IS the
-    # headline `value`, so it gets the tightest defense: best-of-3 with a
-    # brief cooldown before each run (the driver benches right after its
-    # ~12-min correctness sweep, when the box is thermally throttled) and
-    # a 1.3x guard vs the all-rounds record — ~1.5x thermal drift on this
-    # one number misrepresented the engine in r2 AND r3.
-    timed("extract", lambda: pipeline.extract_documents(docs, media),
-          runs=3, guard=1.3, cooldown=2.0)
-    timed("detect_recognize_refs", lambda: pipeline.ocr_media_refs(
-        pipeline.explode_spans(docs), media
-    ))
-    timed("span_algebra", lambda: pipeline.reassemble(
-        pipeline.explode_spans(docs).select(
-            "doc_id", "offset", "kind", "text", "media_ref"
-        )
-    ))
-    timed("dedup_minhash_lsh", lambda: dedup.minhash_lsh_pairs(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("dedup_simhash", lambda: dedup.simhash_pairs(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("dedup_simhash128", lambda: dedup.simhash128_pairs(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("knn_brute", lambda: similarity.brute_force_topk(emb))
-    timed("knn_lsh", lambda: similarity.lsh_topk(emb))
-    timed("knn_ivf", lambda: similarity.ivf_topk(emb))
-    timed("knn_pq", lambda: similarity.pq_topk(emb))
-    timed("quality_tokens", lambda: ta.quality_score(flat_docs).join(
-        ta.token_stats(flat_docs).withColumnRenamed("n_tokens", "n_tokens_ws"),
-        "doc_id",
-    ))
-    timed("dedup_substring_spans", lambda: dedup.duplicate_spans(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("lm_cross_entropy", lambda: ta.lm_cross_entropy(flat_docs))
-    timed("sequence_pack", lambda: ta.sequence_pack(flat_docs))
-    timed("decontaminate", lambda: dedup.decontaminate(flat_docs))
-    timed(
-        "decontaminate_spans",
-        lambda: dedup.decontaminate_spans(
-            dedup.contamination_augment(flat_docs)
-        ),
-    )
-    timed("neardup_pagerank", lambda: dedup.neardup_pagerank(flat_docs))
-    timed(
-        "shard_leakage",
-        lambda: sharding.shard_leakage(
-            dedup.contamination_augment(flat_docs)
-        ),
-    )
-    timed(
-        "snapshot_dedup",
-        lambda: dedup.snapshot_dedup(
-            flat_docs, dedup.snapshot_new(flat_docs)
-        ),
-    )
-    timed("strip_boilerplate", lambda: pipeline.strip_boilerplate(docs))
-    timed("events_sessionize", lambda: events.sessionize(ev))
-    timed("events_distinct_hll", lambda: events.distinct_users_hll(ev))
-    timed("pii_scan", lambda: pii.pii_scan(flat_docs))
-    timed("corpus_mix", lambda: mixing.corpus_mix(flat_docs))
-    timed("countmin", lambda: sketches.countmin_heavy_hitters(flat_docs))
-    timed("bloom", lambda: sketches.bloom_membership(flat_docs))
-    timed("kmeans", lambda: clustering.kmeans_clusters(emb))
-    timed("winnowing", lambda: dedup.winnowing_fingerprints(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("dsir", lambda: mixing.dsir_importance(flat_docs))
-    timed("embedding_outliers", lambda: clustering.embedding_outliers(emb))
-    timed("bm25_topk", lambda: retrieval.bm25_topk(flat_docs))
-    timed("ccnet_buckets", lambda: ta.ccnet_buckets(flat_docs))
-    timed("c4_clean", lambda: cleaning.c4_clean(flat_docs))
-    timed("gopher_rules", lambda: cleaning.gopher_rules(flat_docs))
-    timed("cdc_chunks", lambda: dedup.cdc_chunks(flat_docs))
-    timed("hard_negatives", lambda: similarity.hard_negatives(emb))
-    timed("unimax_mix", lambda: mixing.unimax_mix(flat_docs))
-    timed("ngram_novelty", lambda: dedup.ngram_novelty(
-        dedup.with_mutants(flat_docs)
-    ))
-    timed("html_extract", lambda: web_extract.html_extract(flat_docs))
-    timed("layout_reading_order", lambda: web_extract.layout_reading_order(
-        flat_docs
-    ))
-    timed("normalize_text", lambda: cleaning.normalize_text(flat_docs))
-    timed("char_coverage", lambda: bpe_mod.char_coverage(flat_docs))
-    timed("length_quantiles_hist", lambda: ta.length_quantiles_hist(
-        flat_docs
-    ))
+    for name, build in resolve(QUERY_NAMES).items():
+        if name == "extract":
+            # flagship: full OCR extraction (explode -> dedup refs -> join
+            # bytes -> Arrow OCR UDF -> join back -> reassemble). It IS
+            # the headline `value`, so it gets the tightest defense:
+            # best-of-3 with a brief cooldown before each run (the driver
+            # benches right after its ~12-min correctness sweep, when the
+            # box is thermally throttled) and a 1.3x guard vs the record
+            # — ~1.5x thermal drift on this one number misrepresented the
+            # engine in r2 AND r3.
+            timed(name, build, runs=3, guard=1.3, cooldown=2.0)
+        else:
+            timed(name, build)
 
     extract_sec = timings["extract"]
     result = {
@@ -266,7 +261,7 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
         "media_spec_version": media_spec_version,
         "n_media": n_media,
         "total_sec": round(sum(timings.values()), 2),
-        # queries whose wall exceeded the guard (3x the all-rounds
+        # queries whose wall exceeded the guard (3x the like-for-like
         # record; 1.3x for the flagship; within-round dispersion for
         # first appearances) even after an extra run — treat as
         # environment noise, not a regression, unless they repeat

@@ -63,19 +63,16 @@ def get_reader(
 
 
 def make_ocr_batches(decoder: str, allowlist: str | None = None):
-    """Kernel factory for non-default decoders (beamsearch /
-    wordbeamsearch, reference easyocr/utils.py:181-384) and for
-    allowlist-masked recognition (reference easyocr/easyocr.py:363-368:
-    allowlist -> ignore set pushed into the softmax columns)."""
+    """mapInPandas kernel factory: greedy, beamsearch or wordbeamsearch
+    decoding (reference easyocr/utils.py:181-384), optionally
+    allowlist-masked (reference easyocr/easyocr.py:363-368: allowlist ->
+    ignore set pushed into the softmax columns)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # this name labels the mapInPandas node in physical plans
+    def ocr_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _ocr_batches_impl(it, decoder, allowlist)
 
-    return kernel
-
-
-def ocr_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    return _ocr_batches_impl(it, "greedy")
+    return ocr_batches
 
 
 def _ocr_batches_impl(

@@ -53,14 +53,6 @@ def _char_codes(col: Column) -> Column:
     return F.transform(F.split(col, ""), F.ascii)
 
 
-def _char_fold(col: Column, base: int) -> Column:
-    """31-bit polynomial fold over a string's char codes — the portable
-    string->int hash shared with dedup._poly_hash / fingerprint."""
-    return F.when(
-        F.length(col) > 0, _poly_hash(_char_codes(col), base)
-    ).otherwise(F.lit(0).cast("long"))
-
-
 def _duck_char_fold(col: str, base: int) -> str:
     return (
         "list_reduce(list_prepend(0::BIGINT, "

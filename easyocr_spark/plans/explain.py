@@ -6,7 +6,8 @@ ones we want at 100 TB — filters pushed into the parquet scan
 a side is small, whole-stage codegen spanning the JVM-side expression
 work, exchanges only where the algebra demands a shuffle.
 
-Usage: python -m easyocr_spark.plans.explain [sf_dir]
+Usage (from the repository root, so that bench.py and
+__spark_entry__.py import): python -m easyocr_spark.plans.explain [sf_dir]
 """
 
 from __future__ import annotations
@@ -23,182 +24,41 @@ def capture_plan(df) -> str:
     return buf.getvalue()
 
 
+# the plans dumped, resolved through bench.resolve: the flagship pair
+# ("extract", "detect_recognize_refs") are bench-only builders, every
+# other name is a __spark_entry__.queries() entry
+PLAN_QUERIES = [
+    "extract", "detect_recognize_refs", "dedup_minhash_lsh",
+    "dedup_simhash", "dedup_simhash128", "embedding_neardup", "knn_brute",
+    "top_ngrams", "stratified_sample", "knn_ivf", "knn_pq",
+    "dedup_substring_spans", "lm_cross_entropy", "sequence_pack",
+    "decontaminate", "decontaminate_spans", "neardup_pagerank",
+    "shard_leakage", "snapshot_dedup", "strip_boilerplate",
+    "dedup_keeplist", "pii_scan", "kmeans_clusters", "corpus_mix",
+    "countmin_heavy_hitters", "bloom_membership", "winnowing_fingerprints",
+    "inverted_index", "length_quantiles", "train_split_shards",
+    "dsir_importance", "reservoir_sample", "chunk_overlap",
+    "embedding_outliers", "dup_source_matrix", "mask_duplicate_spans",
+    "profile_documents", "bm25_topk", "ccnet_buckets", "c4_clean",
+    "gopher_rules", "cdc_chunks", "hard_negatives", "unimax_mix",
+    "ngram_novelty", "datacard", "html_extract", "layout_reading_order",
+    "normalize_text", "char_coverage", "length_quantiles_hist",
+    "grouped_split",
+]
+
+
 def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
+    from bench import resolve
+
     from .. import session
-    from ..operators import bpe
-    from ..operators import (
-        cleaning,
-        clustering,
-        curation,
-        dedup,
-        mixing,
-        pii,
-        pipeline,
-        profiling,
-        retrieval,
-        sharding,
-        similarity,
-        sketches,
-        web_extract,
-    )
-    from ..operators import text_analysis as ta
+    from ..operators import pipeline
     from ..sources import tables
 
     spark = session.get_spark(app_name="plans", cpus=8)
-    docs = tables.interleaved_documents(spark, sf_dir)
-    media = tables.media_table(spark, sf_dir)
-    flat = tables.read_table(spark, sf_dir, "documents")
-    emb = tables.read_table(spark, sf_dir, "embeddings")
-
+    builders = resolve(PLAN_QUERIES)
     plans = {
-        "extract_documents (flagship)": pipeline.extract_documents(docs, media),
-        "ocr_media_refs (Arrow UDF stage)": pipeline.ocr_media_refs(
-            pipeline.explode_spans(docs), media
-        ),
-        "minhash_lsh": dedup.minhash_lsh_pairs(dedup.with_mutants(flat)),
-        "simhash (banded, no cross join)": dedup.simhash_pairs(
-            dedup.with_mutants(flat)
-        ),
-        "simhash128 (124-bit production width)": dedup.simhash128_pairs(
-            dedup.with_mutants(flat)
-        ),
-        "embedding_neardup (LSH-bucketed, no cross join)": (
-            similarity.neardup_pairs(similarity.with_planted_dups(emb))
-        ),
-        "knn_brute (broadcast probe)": similarity.brute_force_topk(emb),
-        "top_ngrams (TakeOrdered top-k, no global sort)": ta.top_ngrams(flat),
-        "stratified_sample (broadcast rates, narrow filter)": (
-            ta.stratified_sample(flat)
-        ),
-        "knn_ivf (map-side centroid assignment — no n x nlist exchange)": (
-            similarity.ivf_topk(emb)
-        ),
-        "knn_pq (8-byte codes, broadcast ADC LUTs, bounded re-rank)": (
-            similarity.pq_topk(emb)
-        ),
-        "dedup_substring_spans (no pair join — df filter + islands)": (
-            dedup.duplicate_spans(dedup.with_mutants(flat))
-        ),
-        "lm_cross_entropy (tf-table scoring, broadcast integer model)": (
-            ta.lm_cross_entropy(flat)
-        ),
-        "sequence_pack (shard-local cumsum, boundary explode)": (
-            ta.sequence_pack(flat)
-        ),
-        "decontaminate (shared gram keys, left-semi vs eval set)": (
-            dedup.decontaminate(flat)
-        ),
-        "decontaminate_spans (positional grams, semi-join + islands)": (
-            dedup.decontaminate_spans(dedup.contamination_augment(flat))
-        ),
-        "neardup_pagerank (iterative join-agg, checkpointed lineage)": (
-            dedup.neardup_pagerank(flat)
-        ),
-        "shard_leakage (split-boundary gram audit, two-row output)": (
-            sharding.shard_leakage(dedup.contamination_augment(flat))
-        ),
-        "snapshot_dedup (cross-side band join — never old x old)": (
-            dedup.snapshot_dedup(flat, dedup.snapshot_new(flat))
-        ),
-        "strip_boilerplate (AQE-sized exclusion anti-join)": (
-            pipeline.strip_boilerplate(docs)
-        ),
-        "dedup_keeplist (AQE-sized component join)": (
-            dedup.dedup_keeplist(dedup.with_mutants(flat))
-        ),
-        "pii_scan (narrow regex scan+redact — zero Exchange)": (
-            pii.pii_scan(flat)
-        ),
-        "kmeans_clusters (literal centroids — assignment is zero-shuffle)": (
-            clustering.kmeans_clusters(emb)
-        ),
-        "corpus_mix (one map-combining shuffle + bounded stratum window)": (
-            mixing.corpus_mix(flat)
-        ),
-        "countmin_heavy_hitters (d x w integer sketch, one shuffle)": (
-            sketches.countmin_heavy_hitters(flat)
-        ),
-        "bloom_membership (collected bit-array, map-side probe)": (
-            sketches.bloom_membership(flat)
-        ),
-        "winnowing_fingerprints (Arrow kernel — zero Exchange)": (
-            dedup.winnowing_fingerprints(dedup.with_mutants(flat))
-        ),
-        "inverted_index (stats for all words, postings only under df cap)": (
-            retrieval.inverted_index(flat)
-        ),
-        "length_quantiles (one window per lang partition)": (
-            ta.length_quantiles(flat)
-        ),
-        "train_split_shards (narrow LCG keys; only the epoch-order shuffle)": (
-            sharding.train_split_shards(flat)
-        ),
-        "dsir_importance (one tf shuffle; m-bounded broadcast model)": (
-            mixing.dsir_importance(flat)
-        ),
-        "reservoir_sample (WindowGroupLimit = map-side partial top-k)": (
-            ta.reservoir_sample(flat)
-        ),
-        "chunk_overlap (zero-Exchange Generate + slice)": (
-            ta.chunk_overlap(flat)
-        ),
-        "embedding_outliers (no collect; two bounded shuffles)": (
-            clustering.embedding_outliers(emb)
-        ),
-        "dup_source_matrix (joins on the tiny verified-pair table)": (
-            dedup.dup_source_matrix(flat)
-        ),
-        "mask_duplicate_spans (narrow indexed-HOF mask, left join-back)": (
-            dedup.mask_duplicate_spans(dedup.with_mutants(flat))
-        ),
-        "profile_documents (one stack-unpivot scan, one shuffle)": (
-            profiling.profile_documents(flat)
-        ),
-        "bm25_topk (query-term postings only; broadcast idf + dl join)": (
-            retrieval.bm25_topk(flat)
-        ),
-        "ccnet_buckets (lm shuffle + per-lang window + 2-row broadcast)": (
-            ta.ccnet_buckets(flat)
-        ),
-        "c4_clean (narrow line-filter projection — zero Exchange)": (
-            cleaning.c4_clean(flat)
-        ),
-        "gopher_rules (narrow per-rule audit — zero Exchange)": (
-            cleaning.gopher_rules(flat)
-        ),
-        "cdc_chunks (split('') + bounded window folds — zero Exchange)": (
-            dedup.cdc_chunks(flat)
-        ),
-        "hard_negatives (broadcast probe scan, one query-keyed shuffle)": (
-            similarity.hard_negatives(emb)
-        ),
-        "unimax_mix (one lang-count shuffle; bounded driver fold)": (
-            mixing.unimax_mix(flat)
-        ),
-        "ngram_novelty (df shuffle + gram-keyed semi join-back)": (
-            dedup.ngram_novelty(dedup.with_mutants(flat))
-        ),
-        "datacard (bounded sources x reasons rollup of the manifest)": (
-            curation.datacard(dedup.with_mutants(flat), flat)
-        ),
-        "html_extract (link-density DOM heuristic — zero Exchange)": (
-            web_extract.html_extract(flat)
-        ),
-        "layout_reading_order (per-page column windows + per-doc sort)": (
-            web_extract.layout_reading_order(flat)
-        ),
-        "normalize_text (zero-Exchange regex scrub)": (
-            cleaning.normalize_text(flat)
-        ),
-        "char_coverage (one char shuffle; bounded alphabet windows)": (
-            bpe.char_coverage(flat)
-        ),
-        "length_quantiles_hist (bounded lang x bucket cumsum)": (
-            ta.length_quantiles_hist(flat)
-        ),
-        "grouped_split (component-keyed split; bounded dup-side join)": (
-            sharding.grouped_split(dedup.with_mutants(flat))
-        ),
+        name: capture_plan(build(spark, sf_dir))
+        for name, build in builders.items()
     }
     # the 100-TB join shapes: the same flagship with broadcast disabled
     # (results join-back + media join degrade to shuffle joins) and with
@@ -207,17 +67,16 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plans["extract_documents (broadcast DISABLED — at-scale shuffle shape)"] = (
-            pipeline.extract_documents(docs, media)
+        plans["extract (broadcast DISABLED — at-scale shuffle shape)"] = (
+            capture_plan(builders["extract"](spark, sf_dir))
         )
-        plans["extract_documents (salted results join fallback)"] = (
-            pipeline.extract_documents(docs, media, results_join="salted")
+        plans["extract (salted results join fallback)"] = capture_plan(
+            pipeline.extract_documents(
+                tables.interleaved_documents(spark, sf_dir),
+                tables.media_table(spark, sf_dir),
+                results_join="salted",
+            )
         )
-        forced = {
-            k: capture_plan(df)
-            for k, df in plans.items()
-            if "DISABLED" in k or "salted" in k
-        }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
@@ -227,8 +86,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         "check when reading: PushedFilters/ReadSchema on scans, broadcast\n"
         "vs shuffle joins, WholeStageCodegen spans, exchange count.\n"
     )
-    for name, df in plans.items():
-        plan_txt = forced[name] if name in forced else capture_plan(df)
+    for name, plan_txt in plans.items():
         out.append(f"\n## {name}\n\n```\n{plan_txt}```\n")
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))

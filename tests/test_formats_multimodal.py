@@ -21,7 +21,7 @@ def ocr_results(spark):
     refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
     with_bytes = refs.join(media, "media_ref", "inner")
     det = with_bytes.mapInPandas(
-        udfs.ocr_batches, schema=udfs.OCR_RESULT_SCHEMA
+        udfs.make_ocr_batches("greedy"), schema=udfs.OCR_RESULT_SCHEMA
     ).withColumn("boxes", F.array().cast("array<int>"))
     return det.cache()
 

@@ -153,22 +153,29 @@ def test_bench_previous_round_timings_rolling_min(tmp_path, monkeypatch):
     format (our JSON line nested under 'parsed') and take the rolling
     per-query MIN across ALL rounds — a throttle-contaminated newest
     round (r3's extract 6.76s vs the 3.99s idle-box truth) must not
-    poison the baseline."""
+    poison the baseline. Only rounds with this run's (cpus, sf,
+    media_spec_version) count: a faster round on another core count
+    is not a like-for-like record."""
     import json
 
     import bench
 
+    run = {"cpus": 4, "sf": "/data/sf0.1", "media_spec_version": 8}
     (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 3.0, "only_r1": 1.5}}})
+        json.dumps({"parsed": {**run, "queries": {"q": 3.0, "only_r1": 1.5}}})
     )
     (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 9.0, "only_r2": 2.5}}})
+        json.dumps({"parsed": {**run, "queries": {"q": 9.0, "only_r2": 2.5}}})
+    )
+    (tmp_path / "BENCH_r03.json").write_text(
+        json.dumps({"parsed": {**run, "cpus": 32,
+                               "queries": {"q": 0.5, "only_r3": 0.1}}})
     )
     (tmp_path / "BENCH_rbad.json").write_text("not json")
     monkeypatch.setattr(
         "os.path.dirname", lambda p: str(tmp_path), raising=True
     )
-    assert bench._previous_round_timings() == {
+    assert bench._previous_round_timings(4, "/data/sf0.1", 8) == {
         "q": 3.0,  # min across rounds, NOT the newest round's 9.0
         "only_r1": 1.5,
         "only_r2": 2.5,
