@@ -202,8 +202,8 @@ def normalize_pad(crop: np.ndarray, target_h: int = IMG_H,
 
 class TorchCrnnRecognizer:
     """recognize_probs(crop) -> [T, C] softmax matrix with blank at
-    index 0 — the same contract the stand-in's _frames_for_chunk
-    produces, so ocr/ctc.py decoders apply unchanged."""
+    index 0 — the same contract as the stand-in's recognize_pass
+    frame rows, so ocr/ctc.py decoders apply unchanged."""
 
     def __init__(self, weights_path: str | None = None, quantize: bool = False,
                  model: str = "english"):

@@ -1,11 +1,12 @@
 """Torch-backed Reader facade — same interface as StandInReader.
 
-detect/recognize/readtext/readtext_text mirror ocr/reader.py so
-ocr/udfs.py kernels work with either backend unchanged: the ONLY
-differences are the score-map producer (real CRAFT) and the [T, C]
-probability producer (real CRNN). Grouping, min-size filtering,
-four-point warping, paragraph assembly, CTC decoding, and RTL routing
-are the engine's shared numpy implementations.
+detect/crops/recognize_crops/recognize/readtext/readtext_text mirror
+ocr/reader.py so ocr/udfs.py kernels work with either backend
+unchanged: the ONLY differences are the score-map producer (real
+CRAFT) and the [T, C] probability producer (real CRNN). Grouping,
+min-size filtering, four-point warping, paragraph assembly, CTC
+decoding, and the reading-order projection are the engine's shared
+numpy implementations.
 
 UNTESTED IN THIS SANDBOX (no torch); structure tests importorskip.
 """
@@ -16,7 +17,7 @@ import numpy as np
 
 from ..grouping import group_text_box, min_size_filter
 from ..paragraph import get_paragraph
-from ..reader import MIN_SIZE, four_point_transform
+from ..reader import MIN_SIZE, four_point_transform, reading_order_text
 from ..recognition import adjust_contrast_grey, contrast_grey
 from .torch_craft import TorchCraftDetector
 from .torch_crnn import TorchCrnnRecognizer
@@ -134,19 +135,31 @@ class TorchReader:
                     return t2, c2
         return text, conf
 
-    def recognize(self, gray, horizontal_list, free_list, paragraph=False):
+    def crops(self, gray, horizontal_list, free_list):
+        """(boxes, crops) in recognition order, as StandInReader.crops
+        (free quads are always perspective-warped here)."""
         h, w = gray.shape
-        results = []
+        boxes, crops = [], []
         for x0, x1, y0, y1 in horizontal_list:
             crop = gray[max(0, y0): min(h, y1), max(0, x0): min(w, x1)]
             if crop.size == 0:
                 continue
-            text, conf = self._decode_crop(crop)
-            results.append(([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], text, conf))
+            boxes.append([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
+            crops.append(crop)
         for quad in free_list:
-            crop = four_point_transform(gray, np.asarray(quad))
-            text, conf = self._decode_crop(crop)
-            results.append(([list(p) for p in quad], text, conf))
+            boxes.append([list(p) for p in quad])
+            crops.append(four_point_transform(gray, np.asarray(quad)))
+        return boxes, crops
+
+    def recognize_crops(self, crops):
+        return [self._decode_crop(crop) for crop in crops]
+
+    def recognize(self, gray, horizontal_list, free_list, paragraph=False):
+        boxes, crops = self.crops(gray, horizontal_list, free_list)
+        results = [
+            (box, text, conf)
+            for box, (text, conf) in zip(boxes, self.recognize_crops(crops))
+        ]
         if paragraph:
             mode = "rtl" if "ar" in self.lang_list else "ltr"
             return get_paragraph(results, mode=mode)
@@ -157,15 +170,6 @@ class TorchReader:
         return self.recognize(gray, horizontal, free, paragraph=paragraph)
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
-        results = [(b, t) for b, t, _ in self.readtext(gray) if t]
-        if not rtl:
-            return " ".join(t for _, t in results)
-        lines: list[list[str]] = []
-        last_y = None
-        for box, text in results:
-            y0 = box[0][1]
-            if last_y is None or y0 != last_y:
-                lines.append([])
-                last_y = y0
-            lines[-1].append(text)
-        return " ".join(t for line in lines for t in reversed(line))
+        horizontal, free = self.detect(gray)
+        results = self.recognize(gray, horizontal, free)
+        return reading_order_text(results, len(free), rtl)

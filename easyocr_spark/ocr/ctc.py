@@ -75,7 +75,7 @@ def word_beam_search(
     semantics (decode_wordbeamsearch easyocr/utils.py:352-384 +
     BeamState.wordsearch :88-108): the matrix passed in is already ONE
     space-separated segment — segmentation happens upstream at the
-    word gaps (recognize_crop's chunk split plays the role of the
+    word gaps (recognize_pass's chunk split plays the role of the
     no-separator branch's argwhere(argmax != space) timestep split) —
     beam-search it, walk the final beam candidates in probability
     order, and snap to the FIRST candidate that is a dictionary word.

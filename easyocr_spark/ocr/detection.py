@@ -76,23 +76,37 @@ def compute_score_maps(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     h, w = gray.shape
     h2, w2 = h // 2, w // 2
     lo, hi = int(gray.min()), int(gray.max())
-    g2 = gray[: h2 * 2, : w2 * 2].reshape(h2, 2, w2, 2).min(axis=(1, 3))
+    g = gray[: h2 * 2, : w2 * 2]
+    g2 = np.minimum(
+        np.minimum(g[0::2, 0::2], g[0::2, 1::2]),
+        np.minimum(g[1::2, 0::2], g[1::2, 1::2]),
+    )
     inv = 1.0 / max(hi - lo, 1)
     region = (hi - g2.astype(np.float32)) * inv  # adaptive stretch (module doc)
     # affinity: anisotropic dilation (sliding max) of the region map —
     # wide horizontally (links characters within a word), 1px vertically
     # (keeps sparse glyph rows connected without merging lines); done as
-    # sliding MIN in the uint8 domain (monotonicity again)
-    lk = g2.copy()
-    for r in range(1, LINK_RADIUS_H + 1):
-        np.minimum(lk[:, r:], g2[:, :-r], out=lk[:, r:])
-        np.minimum(lk[:, :-r], g2[:, r:], out=lk[:, :-r])
-    tmp = lk.copy()
-    for r in range(1, LINK_RADIUS_V + 1):
-        np.minimum(lk[r:, :], tmp[:-r, :], out=lk[r:, :])
-        np.minimum(lk[:-r, :], tmp[r:, :], out=lk[:-r, :])
+    # sliding MIN in the uint8 domain (monotonicity again), over a
+    # 255-padded copy so the window needs no edge cases
+    lk = _sliding_min(g2, LINK_RADIUS_H, LINK_RADIUS_V)
     link = (hi - lk.astype(np.float32)) * inv
     return region, link
+
+
+def _sliding_min(a: np.ndarray, rh: int, rv: int) -> np.ndarray:
+    """Min of a uint8 array over the window [x - rh, x + rh] x
+    [y - rv, y + rv], clipped at the edges: the array is padded with 255
+    (neutral for min), then one horizontal and one vertical pass."""
+    h, w = a.shape
+    p = np.full((h + 2 * rv, w + 2 * rh), 255, dtype=a.dtype)
+    p[rv : rv + h, rh : rh + w] = a
+    rows = p[:, :w].copy()
+    for k in range(1, 2 * rh + 1):
+        np.minimum(rows, p[:, k : k + w], out=rows)
+    out = rows[:h].copy()
+    for k in range(1, 2 * rv + 1):
+        np.minimum(out, rows[k : k + h], out=out)
+    return out
 
 
 def connected_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
@@ -197,7 +211,8 @@ def get_det_boxes(
     area = np.bincount(flat, minlength=n + 1)
     maxscore = np.zeros(n + 1, dtype=region.dtype)
     np.maximum.at(maxscore, flat, region.ravel())
-    ys, xs = np.nonzero(text_score & (labels > 0))
+    text_mask = text_score & (labels > 0)
+    ys, xs = np.nonzero(text_mask)
     labs = labels[ys, xs]
     big = 1 << 30
     ix0 = np.full(n + 1, big)
@@ -208,7 +223,6 @@ def get_det_boxes(
     np.maximum.at(ix1, labs, xs)
     np.minimum.at(iy0, labs, ys)
     np.maximum.at(iy1, labs, ys)
-    text_mask = text_score & (labels > 0)
     boxes: list[np.ndarray] = []
     n_chars: list[int] = []
     polys: list[np.ndarray | None] = []

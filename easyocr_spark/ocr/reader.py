@@ -8,8 +8,13 @@ API mirror of the reference's Reader (reference easyocr/easyocr.py):
   right words), two-pass contrast retry, greedy/beam/wordbeam decoder
   switch, allowlist/blocklist masking, rotation TTA.
 - ``readtext(gray)`` = detect ∘ recognize             (:440-474)
-- ``readtext_text`` — the projection our span pipeline uses: non-empty
-  texts joined by single spaces in reading order.
+- ``readtext_text`` — the projection our span pipeline uses:
+  ``reading_order_text`` of the free-merged results.
+
+``recognize`` is ``crops`` (cut every box) followed by
+``recognize_crops`` (one batched recognition call over all of them);
+the OCR UDF calls the two halves itself so that every crop of an Arrow
+batch shares one recognition call.
 
 The detect stage is pluggable ('craft' score-map strategy,
 'dbnet' — the real DBNet post-process over shrunken-kernel maps,
@@ -32,7 +37,7 @@ import numpy as np
 from . import detection, detection_projection
 from .grouping import group_text_box, min_size_filter
 from .paragraph import get_paragraph
-from .recognition import build_ignore_mask, recognize_two_pass
+from .recognition import build_ignore_mask, recognize_batch
 
 MIN_SIZE = 10
 
@@ -97,6 +102,27 @@ def merge_to_free(results: list, n_free: int) -> list:
                 break
         line.insert(x_pos, fr)
     return [r for line in lines for r in line]
+
+
+def reading_order_text(results: list, n_free: int, rtl: bool = False) -> str:
+    """The span-text projection of recognize() results: free-quad
+    results merged into reading position (merge_to_free), non-empty
+    texts joined by single spaces. ``rtl`` reverses word order within
+    each line — consecutive results with the same top y — (the bidi
+    display reordering stand-in, reference easyocr/easyocr.py:414-418,
+    applied when the routed language is Arabic)."""
+    kept = [(box, t) for box, t, _ in merge_to_free(results, n_free) if t]
+    if not rtl:
+        return " ".join(t for _, t in kept)
+    lines: list[list[str]] = []
+    last_y = None
+    for box, text in kept:
+        y0 = box[0][1]
+        if last_y is None or y0 != last_y:
+            lines.append([])
+            last_y = y0
+        lines[-1].append(text)
+    return " ".join(t for line in lines for t in reversed(line))
 
 
 def deshear_crop(gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
@@ -253,21 +279,53 @@ class StandInReader:
         )
         return min_size_filter(horizontal, free, min_size)
 
-    def _decode_crop(
-        self, crop: np.ndarray, rotation_info: list[int] | None
-    ) -> tuple[str, float]:
-        text, conf = recognize_two_pass(
-            crop, decoder=self.decoder, ignore=self.ignore, model=self.recog_model
+    def crops(
+        self,
+        gray: np.ndarray,
+        horizontal_list: list[list[int]],
+        free_list: list[list[list[float]]],
+    ) -> tuple[list, list[np.ndarray]]:
+        """(boxes, crops) in recognition order: horizontal boxes (empty
+        crops dropped), then free quads (unsheared or warped)."""
+        h, w = gray.shape
+        boxes: list = []
+        crops: list[np.ndarray] = []
+        # horizontal boxes are already in reading order from grouping;
+        # the reference's get_image_list re-sorts by top y
+        # (easyocr/utils.py:621-622) which is stable-equal here
+        for x0, x1, y0, y1 in horizontal_list:
+            crop = gray[max(0, y0) : min(h, y1), max(0, x0) : min(w, x1)]
+            if crop.size == 0:
+                continue
+            boxes.append([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
+            crops.append(crop)
+        for quad in free_list:
+            q = np.asarray(quad)
+            if _is_vertical_edged(q):
+                crops.append(deshear_crop(gray, q))
+            else:
+                crops.append(four_point_transform(gray, q))
+            boxes.append([list(p) for p in quad])
+        return boxes, crops
+
+    def recognize_crops(
+        self, crops: list[np.ndarray], rotation_info: list[int] | None = None
+    ) -> list[tuple[str, float]]:
+        """[(text, conf)] per crop from one batched recognition call;
+        with rotation_info every crop is also decoded at each rotation
+        (same call) and the first highest-confidence variant wins."""
+        rots = rotation_info or []
+        variants = crops + [np.rot90(c, k=r // 90) for r in rots for c in crops]
+        res = recognize_batch(
+            variants, decoder=self.decoder, ignore=self.ignore,
+            model=self.recog_model,
         )
-        for rot in rotation_info or []:
-            rotated = np.rot90(crop, k=rot // 90)
-            t2, c2 = recognize_two_pass(
-                rotated, decoder=self.decoder, ignore=self.ignore,
-                model=self.recog_model,
-            )
-            if c2 > conf:
-                text, conf = t2, c2
-        return text, conf
+        best = res[: len(crops)]
+        for j in range(1, len(rots) + 1):
+            for i, cand in enumerate(res[j * len(crops) : (j + 1) * len(crops)]):
+                if cand[1] > best[i][1]:
+                    best[i] = cand
+        return best
 
     def recognize(
         self,
@@ -278,27 +336,11 @@ class StandInReader:
         paragraph: bool = False,
         free_merge: bool = False,
     ) -> list:
-        h, w = gray.shape
-        results: list[tuple[list, str, float]] = []
-        # horizontal boxes are already in reading order from grouping;
-        # the reference's get_image_list re-sorts by top y
-        # (easyocr/utils.py:621-622) which is stable-equal here
-        for x0, x1, y0, y1 in horizontal_list:
-            x0c, y0c = max(0, x0), max(0, y0)
-            crop = gray[y0c : min(h, y1), x0c : min(w, x1)]
-            if crop.size == 0:
-                continue
-            text, conf = self._decode_crop(crop, rotation_info)
-            box = [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
-            results.append((box, text, conf))
-        for quad in free_list:
-            q = np.asarray(quad)
-            if _is_vertical_edged(q):
-                crop = deshear_crop(gray, q)
-            else:
-                crop = four_point_transform(gray, q)
-            text, conf = self._decode_crop(crop, rotation_info)
-            results.append(([list(p) for p in quad], text, conf))
+        boxes, crops = self.crops(gray, horizontal_list, free_list)
+        results = [
+            (box, text, conf)
+            for box, (text, conf) in zip(boxes, self.recognize_crops(crops, rotation_info))
+        ]
         if free_merge:
             results = merge_to_free(results, len(free_list))
         if paragraph:
@@ -324,22 +366,7 @@ class StandInReader:
         )
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
-        """Reading-order concatenation — the span-text projection.
-        ``rtl`` reverses word order within each line (the bidi display
-        reordering stand-in, reference easyocr/easyocr.py:414-418 —
-        applied when the routed language is Arabic). free_merge puts
-        free-quad results in reading position among the horizontal ones
-        (a no-op for all-upright or all-slanted pages)."""
-        results = [(b, t) for b, t, _ in self.readtext(gray, free_merge=True) if t]
-        if not rtl:
-            return " ".join(t for _, t in results)
-        # group consecutive results into lines by top-y, reverse within
-        lines: list[list[str]] = []
-        last_y = None
-        for box, text in results:
-            y0 = box[0][1]
-            if last_y is None or y0 != last_y:
-                lines.append([])
-                last_y = y0
-            lines[-1].append(text)
-        return " ".join(t for line in lines for t in reversed(line))
+        """Reading-order concatenation — the span-text projection."""
+        horizontal, free = self.detect(gray)
+        results = self.recognize(gray, horizontal, free)
+        return reading_order_text(results, len(free), rtl)

@@ -2,11 +2,11 @@
 
 Design contract from BASELINE.json input_hint: vectorized pandas/Arrow
 UDFs ONLY, zero per-row Python at the Spark boundary. One Arrow batch of
-(media_ref, content) rows crosses into the Python worker; the whole
-decode -> detect -> group -> crop -> recognize -> order -> concat
-pipeline runs per image inside the batch (the reference's
-readtext_batched unit of work, easyocr/easyocr.py:538-579); one Arrow
-batch of (media_ref, text, conf, n_boxes) comes back.
+(media_ref, content) rows crosses into the Python worker; decode ->
+detect -> group -> crop runs per image, recognition runs once over every
+crop of the batch (per reader), then order -> concat per image (the
+reference's readtext_batched unit of work, easyocr/easyocr.py:538-579);
+one Arrow batch of (media_ref, text, conf, n_boxes) comes back.
 
 Executor-resident model state: the reader singleton (glyph atlas =
 stand-in weights) is a module-level lazy global in the Python worker
@@ -24,7 +24,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from ..fixtures.png import decode_gray, decode_image
-from .reader import StandInReader
+from .reader import StandInReader, reading_order_text
 
 OCR_RESULT_SCHEMA = "media_ref string, text string, conf double, n_boxes int"
 
@@ -79,34 +79,35 @@ def _ocr_batches_impl(
     it: Iterator[pd.DataFrame], decoder: str, allowlist: str | None = None
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (media_ref, content[, lang]) ->
-    OCR_RESULT_SCHEMA. The lang column routes RTL post-processing
-    (Arabic word order within lines — the reference's bidi reordering,
-    easyocr/easyocr.py:414-418)."""
+    OCR_RESULT_SCHEMA, in batch-level stages: decode, detect and cut
+    the crops of every image; recognize all crops of the batch that
+    share a reader in one call; then assemble each image's text in
+    reading order. The lang column routes the recognition model and RTL
+    post-processing (Arabic word order within lines — the reference's
+    bidi reordering, easyocr/easyocr.py:414-418)."""
     for pdf in it:
+        langs = pdf["lang"] if "lang" in pdf.columns else [""] * len(pdf)
+        pending: dict[object, list] = {}  # reader -> the batch's crops
+        images = []
+        for data, lang in zip(pdf["content"], langs):
+            reader = get_reader(decoder, allowlist, str(lang))
+            gray = decode_gray(bytes(data))
+            horizontal, free = reader.detect(gray)
+            boxes, crops = reader.crops(gray, horizontal, free)
+            batch = pending.setdefault(reader, [])
+            images.append((reader, boxes, len(free), len(batch), lang == "arabic"))
+            batch.extend(crops)
+        recognized = {r: r.recognize_crops(crops) for r, crops in pending.items()}
         texts: list[str] = []
         confs: list[float] = []
         n_boxes: list[int] = []
-        langs = pdf["lang"] if "lang" in pdf.columns else [""] * len(pdf)
-        for data, lang in zip(pdf["content"], langs):
-            reader = get_reader(decoder, allowlist, str(lang))
-            img = decode_gray(bytes(data))
-            results = reader.readtext(img)
-            kept = [(b, t, c) for b, t, c in results if t]
-            if lang == "arabic":
-                lines: list[list[str]] = []
-                last_y = None
-                for box, t, _ in kept:
-                    y0 = box[0][1]
-                    if last_y is None or y0 != last_y:
-                        lines.append([])
-                        last_y = y0
-                    lines[-1].append(t)
-                texts.append(
-                    " ".join(t for line in lines for t in reversed(line))
-                )
-            else:
-                texts.append(" ".join(t for _, t, _ in kept))
-            confs.append(min((c for _, _, c in kept), default=0.0))
+        for reader, boxes, n_free, lo, rtl in images:
+            results = [
+                (box, text, conf)
+                for box, (text, conf) in zip(boxes, recognized[reader][lo:])
+            ]
+            texts.append(reading_order_text(results, n_free, rtl))
+            confs.append(min((c for _, t, c in results if t), default=0.0))
             n_boxes.append(len(results))
         yield pd.DataFrame(
             {

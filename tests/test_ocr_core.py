@@ -8,8 +8,8 @@ from easyocr_spark.ocr.reader import StandInReader, four_point_transform
 from easyocr_spark.ocr.recognition import (
     adjust_contrast_grey,
     contrast_grey,
-    recognize_crop,
-    recognize_two_pass,
+    recognize_batch,
+    recognize_pass,
 )
 
 READER = StandInReader()
@@ -54,10 +54,97 @@ def test_tiny_image_filtered_by_min_size():
 
 def test_low_contrast_takes_second_pass():
     img = render.render_text([["HELLO"]], scale=2, low_contrast=True)
-    text1, conf1 = recognize_crop(img, adjust=False)
+    [(text1, conf1)] = recognize_pass([img], adjust=False)
     assert conf1 < 0.1  # pass 1 fails on low contrast
-    text2, conf2 = recognize_two_pass(img)
+    [(text2, conf2)] = recognize_batch([img])
     assert text2 == "HELLO" and conf2 > 0.5
+
+
+def test_contrast_grey_percentiles_match_numpy():
+    # the histogram percentile must equal np.percentile bit for bit,
+    # including the lerp's t >= 0.5 branch and degenerate images
+    rng = np.random.default_rng(7)
+    imgs = [
+        np.array([[0]], np.uint8),
+        np.array([[255]], np.uint8),
+        np.full((3, 4), 17, np.uint8),
+        np.array([[0, 255]], np.uint8),
+        np.array([[255, 0, 0, 0, 0, 0, 0, 0, 0, 0, 255]], np.uint8),
+        np.where(rng.random((9, 13)) < 0.8, 250, 30).astype(np.uint8),
+    ]
+    for _ in range(2000):
+        h, w = rng.integers(1, 30, size=2)
+        lo, hi = sorted(rng.integers(0, 256, size=2))
+        imgs.append(rng.integers(lo, hi + 1, size=(h, w), dtype=np.uint8))
+    for img in imgs:
+        high, low = np.percentile(img, 90), np.percentile(img, 10)
+        expect = (high - low) / max(10.0, high + low)
+        c, hi_, lo_ = contrast_grey(img)
+        assert (hi_, lo_) == (high, low), img
+        assert c.hex() == float(expect).hex()
+
+
+def test_ink_threshold_matches_darkness_rule():
+    # recognition binarizes with one gray-level threshold; that equals
+    # the float32 darkness rule because darkness, with or without the
+    # pass-2 contrast stretch, is monotone in the gray level
+    from easyocr_spark.ocr import recognition as R
+
+    levels = np.arange(256)
+    dark = (255.0 - levels.astype(np.float32)) / 255.0 > R.INK_THRESHOLD
+    assert (dark == (levels < R._INK_BELOW)).all()
+    rng = np.random.default_rng(5)
+    stretched = 0
+    for _ in range(500):
+        lo, hi = sorted(rng.integers(0, 256, size=2))
+        img = rng.integers(lo, hi + 1, size=(9, 20), dtype=np.uint8)
+        lut = R._contrast_lut(img, R.ADJUST_CONTRAST)
+        if lut is None:
+            continue
+        stretched += 1
+        ink = (255.0 - lut.astype(np.float32)) / 255.0 > R.INK_THRESHOLD
+        assert (ink == (levels < int((lut < R._INK_BELOW).sum()))).all()
+    assert stretched > 100
+
+
+def _score_maps_reference(gray):
+    """The reshape block-min + shifted in-place min formulation that
+    compute_score_maps replaced, kept as the parity reference."""
+    h, w = gray.shape
+    h2, w2 = h // 2, w // 2
+    lo, hi = int(gray.min()), int(gray.max())
+    g2 = gray[: h2 * 2, : w2 * 2].reshape(h2, 2, w2, 2).min(axis=(1, 3))
+    inv = 1.0 / max(hi - lo, 1)
+    region = (hi - g2.astype(np.float32)) * inv
+    lk = g2.copy()
+    for r in range(1, detection.LINK_RADIUS_H + 1):
+        np.minimum(lk[:, r:], g2[:, :-r], out=lk[:, r:])
+        np.minimum(lk[:, :-r], g2[:, r:], out=lk[:, :-r])
+    tmp = lk.copy()
+    for r in range(1, detection.LINK_RADIUS_V + 1):
+        np.minimum(lk[r:, :], tmp[:-r, :], out=lk[r:, :])
+        np.minimum(lk[:-r, :], tmp[r:, :], out=lk[:-r, :])
+    return region, (hi - lk.astype(np.float32)) * inv
+
+
+def test_score_maps_match_reference_formulation():
+    rng = np.random.default_rng(3)
+    imgs = [
+        detection.resize_aspect_ratio(
+            png.decode_gray(corpus.render_media(f"m_{a}_{b}"))
+        )[0]
+        for a in range(0, 60, 5)
+        for b in range(3)
+    ]
+    imgs += [
+        rng.integers(0, 256, size=tuple(rng.integers(1, 24, size=2)), dtype=np.uint8)
+        for _ in range(200)
+    ]
+    for img in imgs:
+        want = _score_maps_reference(img)
+        got = detection.compute_score_maps(img)
+        for g, w in zip(got, want):
+            assert g.shape == w.shape and g.tobytes() == w.tobytes()
 
 
 def test_contrast_adjustment_semantics():

@@ -472,6 +472,22 @@ def test_torch_reader_end_to_end_under_shim(tmp_path):
         # paragraph mode + flat-text variants execute the same pipeline
         assert isinstance(reader.readtext(gray, paragraph=True), list)
         assert isinstance(reader.readtext_text(gray), str)
+        # the mapInPandas kernel drives the same reader through its
+        # crops / recognize_crops entry points
+        import pandas as pd
+
+        from easyocr_spark.fixtures import png
+        from easyocr_spark.ocr import udfs
+
+        key = ("greedy", "ABC0123456789 ", "")
+        udfs._READERS[key] = reader
+        try:
+            pdf = pd.DataFrame({"media_ref": ["p"], "content": [png.encode_gray(gray)]})
+            [out] = list(udfs.make_ocr_batches(*key[:2])(iter([pdf])))
+        finally:
+            del udfs._READERS[key]
+        assert out["text"].tolist() == [reader.readtext_text(gray)]
+        assert out["n_boxes"].tolist() == [len(results)]
 
 
 def test_normalize_pad_shape_and_range():
